@@ -6,7 +6,7 @@ from __future__ import annotations
 
 from functools import reduce
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, functions as F
 
 
 def rename_columns(df: DataFrame, mapping: dict[str, str]) -> DataFrame:
@@ -88,8 +88,10 @@ def spot_fix_values(df: DataFrame, idx_cols: list[str],
         keys = [tuple(fx[:len(idx_cols)]) for fx in fixes]
         if len(keys) != len(set(keys)):
             raise ValueError("spot_fix_values: duplicate keys in fix table")
-    spark = SparkSession.getActiveSession()
-    fix_df = spark.createDataFrame(
+    # df.sparkSession, not the per-thread active session: the lookup
+    # returns None on a thread that never set one (an asset built on
+    # a materialize pool thread).
+    fix_df = df.sparkSession.createDataFrame(
         fixes, schema=idx_cols + [f"__fix_{c}" for c in fix_cols]
     )
     out = df.join(F.broadcast(fix_df), on=idx_cols, how="left")

@@ -9,14 +9,19 @@ src/pudl/dagster/assets/__init__.py:31-56; schema enforcement at the
 sink src/pudl/dagster/io_managers.py:139-152,379-418).
 
 Spark-first re-expression: an asset is a ``(spark, inputs) ->
-DataFrame`` function; the graph is topologically materialized with a
-Parquet checkpoint per asset (exactly the reference's per-asset
+DataFrame`` function; the graph is materialized with a Parquet
+checkpoint per asset (exactly the reference's per-asset
 materialization, which is what makes a 100 TB run restartable and
 keeps any single lineage shallow). Between assets Catalyst sees plain
 parquet scans, so pruning/pushdown work across layer boundaries;
 within an asset the whole transform is one optimized plan — the
 process-boundary pickling the reference pays per Dagster op simply
 disappears.
+
+Like Dagster's multiprocess executor (src/pudl/dagster/config.py),
+independent assets build side by side: a topological wavefront feeds
+a thread pool sized to the session's ``defaultParallelism``, and every
+thread submits its asset's Spark jobs to the one shared session.
 """
 
 from __future__ import annotations
@@ -110,9 +115,10 @@ class AssetGraph:
                 "|".join(parts).encode()).hexdigest()[:32]
         return fps
 
-    def order(self, selection: list[str] | None = None) -> list[str]:
-        """Topological materialization order (full graph or the
-        upstream closure of ``selection``)."""
+    def _dep_graph(self, selection: list[str] | None = None
+                   ) -> TopologicalSorter:
+        """Dependency sorter over the full graph or the upstream
+        closure of ``selection``."""
         wanted = set(self.assets) if selection is None else set()
         if selection is not None:
             stack = list(selection)
@@ -122,45 +128,50 @@ class AssetGraph:
                     continue
                 wanted.add(n)
                 stack.extend(self.assets[n].deps)
-        ts = TopologicalSorter(
+        return TopologicalSorter(
             {n: [d for d in self.assets[n].deps if d in wanted]
              for n in wanted})
-        return list(ts.static_order())
+
+    def order(self, selection: list[str] | None = None) -> list[str]:
+        """Topological materialization order (full graph or the
+        upstream closure of ``selection``)."""
+        return list(self._dep_graph(selection).static_order())
 
     def materialize(self, spark: SparkSession, store_dir: str,
                     selection: list[str] | None = None,
                     skip_existing: bool = False,
-                    incremental: bool = False,
-                    max_workers: int = 1) -> dict[str, str]:
+                    incremental: bool = False) -> dict[str, str]:
         """Run the DAG; each asset is written to
         ``store_dir/<name>.parquet`` and downstream assets read the
         materialized copy (checkpoint semantics — shallow lineage,
         restartable). Returns name -> path.
+
+        Independent assets build concurrently (ref: Dagster's
+        multiprocess executor): every asset whose dependencies are
+        done is submitted at once to a thread pool of
+        ``spark.sparkContext.defaultParallelism`` threads, and each
+        thread runs its asset's transform, schema enforcement, sink
+        and checks, submitting the Spark jobs to the shared session.
+        A wide DAG therefore keeps the cluster busy instead of
+        building one asset at a time.
 
         ``incremental=True`` skips any asset whose fingerprint (code
         version + external-input signature + upstream closure, see
         :meth:`fingerprints`) matches the manifest recorded by the
         previous run AND whose output still exists — so a 100 TB
         rebuild after a one-asset change recomputes only that asset's
-        downstream cone, not the world. The manifest updates after
-        EVERY asset, so an interrupted run resumes where it stopped.
+        downstream cone, not the world. The manifest is rewritten
+        (under a lock) after EVERY asset, so an interrupted run
+        resumes where it stopped.
 
-        ``max_workers > 1`` materializes INDEPENDENT assets
-        concurrently (ref: Dagster's multiprocess executor): a
-        topological wavefront feeds a thread pool, and each thread
-        submits its asset's Spark jobs from the shared session —
-        Spark schedules concurrent jobs fine (set the FAIR scheduler
-        for even sharing), so a wide DAG keeps a 1000-executor
-        cluster busy instead of serializing one asset at a time.
-        Manifest writes are lock-protected; per-asset semantics
-        (skip, checks, schema enforcement) are identical to the
-        serial path.
+        On a failure no further asset is submitted, the assets
+        already in flight finish (and are recorded in the manifest),
+        and the first exception is re-raised.
         """
         import json
         import threading
         from concurrent.futures import (FIRST_COMPLETED,
                                         ThreadPoolExecutor, wait)
-        from graphlib import TopologicalSorter as _TS
 
         manifest_path = os.path.join(store_dir, "_manifest.json")
         manifest: dict[str, str] = {}
@@ -168,9 +179,10 @@ class AssetGraph:
             with open(manifest_path) as f:
                 manifest = json.load(f)
         fps = self.fingerprints(selection) if incremental else {}
-        order = self.order(selection)
         paths = {name: os.path.join(store_dir, f"{name}.parquet")
-                 for name in order}
+                 for name in self.order(selection)}
+        graph = self._dep_graph(selection)
+        graph.prepare()
         lock = threading.Lock()
 
         def run_one(name: str) -> None:
@@ -203,24 +215,23 @@ class AssetGraph:
                     with open(manifest_path, "w") as f:
                         json.dump(manifest, f, indent=0, sort_keys=True)
 
-        if max_workers <= 1:
-            for name in order:
-                run_one(name)
-            return paths
-
-        wanted = set(order)
-        ts = _TS({n: [d for d in self.assets[n].deps if d in wanted]
-                  for n in wanted})
-        ts.prepare()
-        with ThreadPoolExecutor(max_workers=max_workers) as ex:
-            pending: dict = {}
-            while ts.is_active():
-                for name in ts.get_ready():
-                    pending[ex.submit(run_one, name)] = name
+        error: BaseException | None = None
+        pending: dict = {}
+        with ThreadPoolExecutor(
+                max_workers=spark.sparkContext.defaultParallelism) as ex:
+            while True:
+                if error is None:
+                    for name in graph.get_ready():
+                        pending[ex.submit(run_one, name)] = name
                 if not pending:
                     break
                 done, _ = wait(pending, return_when=FIRST_COMPLETED)
                 for fut in done:
-                    ts.done(pending.pop(fut))
-                    fut.result()        # re-raise asset failures
+                    name, exc = pending.pop(fut), fut.exception()
+                    if exc is None:
+                        graph.done(name)
+                    elif error is None:
+                        error = exc
+        if error is not None:
+            raise error
         return paths

@@ -7671,7 +7671,8 @@ def market_share_by_year(spark, sf_dir):
     # relational algebra in one analysis pass: identical join order,
     # identical predicates, identical decimal-routed arithmetic, and
     # the same three pinned-broadcast dimensions via the hint.
-    # Physical plan verified node-for-node equal to the old chain
+    # Physical plan verified semantically equivalent to the old chain
+    # modulo alias-only Projects and nullability flags
     # (plans/r16/market_share_by_year.txt); results oracle-pinned.
     return spark.sql("""
         SELECT o_year,
@@ -9879,21 +9880,30 @@ def table_quality_screens(spark, sf_dir):
     # over the check frames pays a single analysis pass; the check
     # functions and their plans are untouched, so the eleven result
     # rows are unchanged (oracle-pinned).
-    parts, rels = [], {}
+    return _screens_union(spark, frames)
+
+
+def _screens_union(spark, frames):
+    """One ``(check_name, n_violations, metric)`` row per
+    ``(name, violations frame, optional 1-row metric frame)`` entry,
+    as one SQL UNION ALL in entry order. Check names bind as named
+    parameters, so no name can break out of its string literal."""
+    parts, rels, names = [], {}, {}
     for i, (name, viol, metric) in enumerate(frames):
         rels[f"v{i}"] = viol
+        names[f"name{i}"] = name
         if metric is None:
             parts.append(
-                f"SELECT '{name}' AS check_name, "
+                f"SELECT :name{i} AS check_name, "
                 f"CAST(count(1) AS BIGINT) AS n_violations, "
                 f"CAST(NULL AS DOUBLE) AS metric FROM {{v{i}}}")
         else:
             rels[f"m{i}"] = metric
             parts.append(
                 f"SELECT /*+ BROADCAST(m{i}) */ "
-                f"'{name}' AS check_name, n_violations, "
-                f"CAST(metric AS DOUBLE) AS metric "
+                f":name{i} AS check_name, c{i}.n_violations, "
+                f"CAST(m{i}.metric AS DOUBLE) AS metric "
                 f"FROM (SELECT CAST(count(1) AS BIGINT) "
-                f"AS n_violations FROM {{v{i}}}) "
+                f"AS n_violations FROM {{v{i}}}) AS c{i} "
                 f"CROSS JOIN {{m{i}}} AS m{i}")
-    return spark.sql("\nUNION ALL\n".join(parts), **rels)
+    return spark.sql("\nUNION ALL\n".join(parts), args=names, **rels)

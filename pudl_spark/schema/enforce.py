@@ -71,19 +71,21 @@ def check_primary_key(df: DataFrame, pk: tuple[str, ...] | list[str],
                       name: str = "df") -> None:
     """Raise on null or duplicate primary keys (ref: classes.py:2088+).
 
-    Both checks are single aggregations; nothing large is collected.
+    One aggregation over the per-key counts yields both the null-key
+    and the duplicate-key row counts, so the check is a single Spark
+    job and nothing large is collected. A null key is reported before
+    a duplicate one.
     """
     pk = list(pk)
-    null_pred = None
+    any_null = None
     for c in pk:
         cond = F.col(c).isNull()
-        null_pred = cond if null_pred is None else (null_pred | cond)
-    agg = df.groupBy(*pk).count()
-    stats = agg.agg(
+        any_null = cond if any_null is None else (any_null | cond)
+    stats = df.groupBy(*pk).count().agg(
+        F.sum(F.when(any_null, F.col("count"))).alias("nulls"),
         F.sum(F.when(F.col("count") > 1, F.col("count"))).alias("dups"),
     ).collect()[0]
-    nulls = df.filter(null_pred).limit(1).count()
-    if nulls:
+    if stats["nulls"]:
         raise SchemaError(f"{name}: null primary key values in {pk}")
     if stats["dups"]:
         raise SchemaError(f"{name}: {stats['dups']} duplicate PK rows on {pk}")

@@ -50,7 +50,8 @@ def check_row_counts_per_partition(df: DataFrame,
     macro + etl_full_row_counts.csv seed; unit fixtures
     dbt/tests/unit_tests/test_row_counts_*.sql). ``expected`` maps
     partition value -> exact count. One aggregation; the expected
-    side joins as a broadcast literal table. Reference parity (r14):
+    side is a ``VALUES`` table — a local relation, so the check
+    starts no Python worker. Reference parity (r14):
     NULL partition values COALESCE to '' before the join (the
     macro's ``COALESCE(CAST(partition AS VARCHAR), '')`` — a NULL
     key must match an expected '' row, not dangle through the full
@@ -66,12 +67,19 @@ def check_row_counts_per_partition(df: DataFrame,
     missing expected partitions and count mismatches all violate,
     exactly the macro's WHERE.
     """
-    spark = df.sparkSession
     col_name = partition_col or "partition"
-    exp = spark.createDataFrame(
-        [("" if k is None else str(k), int(v))
-         for k, v in expected.items()],
-        f"{col_name} string, expected_count long")
+    args: dict = {}
+    # A NULL placeholder row, dropped by the WHERE, keeps VALUES valid
+    # when ``expected`` is empty.
+    rows = ["(NULL, NULL)"]
+    for i, (k, v) in enumerate(expected.items()):
+        args[f"k{i}"], args[f"n{i}"] = "" if k is None else str(k), int(v)
+        rows.append(f"(:k{i}, :n{i})")
+    exp = df.sparkSession.sql(
+        f"SELECT CAST(k AS STRING) AS `{col_name.replace('`', '``')}`, "
+        f"CAST(n AS BIGINT) AS expected_count "
+        f"FROM VALUES {', '.join(rows)} AS t(k, n) WHERE n IS NOT NULL",
+        args=args)
     if partition_col is None:
         got = df.agg(F.count(F.lit(1)).alias("actual_count")) \
             .select(F.lit("").alias(col_name), "actual_count")
@@ -82,7 +90,7 @@ def check_row_counts_per_partition(df: DataFrame,
             .select(F.coalesce("__raw_part", F.lit(""))
                     .alias(col_name), "actual_count"))
     return (
-        got.join(F.broadcast(exp), on=col_name, how="full_outer")
+        got.join(exp, on=col_name, how="full_outer")
         .filter(
             F.col("actual_count").isNull() | F.col("expected_count").isNull()
             | (F.col("actual_count") != F.col("expected_count")))

@@ -145,9 +145,9 @@ def test_incremental_inputs_signature_invalidates(spark, tmp_path):
 
 def test_parallel_materialization_runs_independent_assets_together(
         spark, tmp_path):
-    """max_workers>1: the two middle diamond assets must be IN FLIGHT
-    at the same time — each waits on a shared barrier the other must
-    reach, which deadlocks (times out) under serial execution."""
+    """The two middle diamond assets must be IN FLIGHT at the same
+    time — each waits on a shared barrier the other must reach, which
+    deadlocks (times out) under serial execution."""
     import threading
 
     from pudl_spark.plans.pipeline import AssetGraph
@@ -174,7 +174,7 @@ def test_parallel_materialization_runs_independent_assets_together(
         return inputs["mid_a"].unionByName(inputs["mid_b"])
 
     store = str(tmp_path / "par")
-    paths = g.materialize(spark, store, max_workers=2)
+    paths = g.materialize(spark, store)
     got = spark.read.parquet(paths["out"])
     assert got.count() == 20
     assert sorted(r["side"] for r in got.select("side")
@@ -197,4 +197,73 @@ def test_parallel_materialization_propagates_failures(spark, tmp_path):
         raise RuntimeError("asset exploded")
 
     with pytest.raises(RuntimeError, match="asset exploded"):
-        g.materialize(spark, str(tmp_path / "fail"), max_workers=2)
+        g.materialize(spark, str(tmp_path / "fail"))
+
+
+def test_failure_stops_submission_and_lets_in_flight_finish(
+        spark, tmp_path):
+    """After an asset fails no new asset is submitted, the assets
+    already in flight finish and reach the manifest, and the failure
+    is re-raised."""
+    import json
+    import threading
+
+    import pytest
+
+    from pudl_spark.plans.pipeline import AssetGraph
+
+    failed = threading.Event()
+    g = AssetGraph()
+
+    @g.add("boom")
+    def boom(sp, inputs):
+        failed.set()
+        raise RuntimeError("asset exploded")
+
+    @g.add("slow")
+    def slow(sp, inputs):
+        assert failed.wait(30)
+        return sp.range(3)
+
+    @g.add("after_slow", deps=("slow",))
+    def after_slow(sp, inputs):
+        return inputs["slow"]
+
+    store = tmp_path / "fail"
+    with pytest.raises(RuntimeError, match="asset exploded"):
+        g.materialize(spark, str(store), incremental=True)
+    assert (store / "slow.parquet").exists()
+    assert not (store / "after_slow.parquet").exists()
+    manifest = json.loads((store / "_manifest.json").read_text())
+    assert set(manifest) == {"slow"}
+
+
+def test_concurrent_manifest_writes_lose_no_asset(spark, tmp_path):
+    """More independent assets than pool threads, with thread switches
+    forced often: every asset must reach the manifest (a lost update
+    would rebuild it on the next incremental run)."""
+    import json
+    import sys
+
+    from pudl_spark.plans.pipeline import AssetGraph
+
+    n = 3 * spark.sparkContext.defaultParallelism
+    built: list[str] = []
+    g = AssetGraph()
+    for i in range(n):
+        @g.add(f"leaf{i}")
+        def leaf(sp, inputs, i=i):
+            built.append(f"leaf{i}")
+            return sp.range(i + 1)
+
+    store = tmp_path / "wide"
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        g.materialize(spark, str(store), incremental=True)
+    finally:
+        sys.setswitchinterval(old)
+    manifest = json.loads((store / "_manifest.json").read_text())
+    assert set(manifest) == set(g.assets)
+    g.materialize(spark, str(store), incremental=True)
+    assert sorted(built) == sorted(g.assets)

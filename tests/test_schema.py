@@ -50,6 +50,20 @@ def test_enforce_schema_raises_on_null_pk(spark):
         enforce_schema(df, RES)
 
 
+def test_null_pk_reported_before_duplicate_pk(spark):
+    """One aggregation finds both; the null-key error wins, as it did
+    when the two checks ran as separate jobs."""
+    from pudl_spark.schema.enforce import check_primary_key
+
+    df = spark.createDataFrame(
+        [(1, "a"), (1, "a"), (2, None)], "k1 long, k2 string")
+    with pytest.raises(SchemaError, match="null primary key values"):
+        check_primary_key(df, ("k1", "k2"), "t")
+    with pytest.raises(SchemaError, match="t: 2 duplicate PK rows"):
+        check_primary_key(df.filter("k2 IS NOT NULL"), ("k1", "k2"), "t")
+    check_primary_key(df.filter("k1 = 2"), ("k1",), "t")
+
+
 def test_enforce_schema_missing_column_raises(spark):
     df = spark.createDataFrame([(1,)], "id long")
     with pytest.raises(SchemaError, match="missing columns"):

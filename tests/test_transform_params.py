@@ -72,3 +72,26 @@ def test_pipeline_is_single_projection(spark):
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "Exchange hashpartitioning" not in plan
     assert plan.count("BroadcastExchange") == 1
+
+
+def test_spot_fix_on_a_pool_thread(spark):
+    """A transform built on a worker thread (as AssetGraph.materialize
+    builds every asset) must not depend on the per-thread active
+    session. Whether a fresh pool thread inherits one depends on which
+    JVM thread serves it, so the test clears it to pin the case where
+    it does not."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    from pyspark.sql import SparkSession
+
+    def build():
+        df = _df(spark)  # createDataFrame sets the active session
+        SparkSession._get_j_spark_session_class(
+            spark._jvm).clearActiveSession()
+        assert SparkSession.getActiveSession() is None
+        return {r["id"]: r["name"] for r in
+                transform_table(df, PARAMS).collect()}
+
+    with ThreadPoolExecutor(max_workers=1) as ex:
+        out = ex.submit(build).result()
+    assert out[2] == "fixed"

@@ -66,6 +66,15 @@ def test_row_counts_per_partition(spark):
     assert len(two) == 2
     assert sorted(r["actual_count"] for r in two) == [1, 2]
     assert all(r["expected_count"] == 3 for r in two)
+    # an empty expected table flags every observed partition
+    none = check_row_counts_per_partition(nulls, "year", {}).collect()
+    assert sorted((r["year"], r["actual_count"], r["expected_count"])
+                  for r in none) == [("", 2, None), ("2020", 1, None)]
+    # the expected side is a local relation: no Python worker starts
+    plan = check_row_counts_per_partition(
+        spark.range(3), "id", {"0": 1}
+    )._jdf.queryExecution().optimizedPlan().toString()
+    assert "LocalRelation" in plan and "LogicalRDD" not in plan
 
 
 def test_quantile_constraints(spark):
@@ -587,6 +596,24 @@ def test_table_quality_screens_plan_pruning(spark):
             assert table.startswith(("nation", "region")), (table, cols)
             assert len(cols) <= 1, (table, cols)
     assert seen_orders == 1
+
+
+def test_quality_screens_union_quotes_and_qualifies(spark):
+    """The screens' one-SQL union tail: a check name holding quotes
+    and a backslash comes back verbatim, and a metric frame that also
+    carries `n_violations` / `check_name` columns does not shadow the
+    projected ones."""
+    from pudl_spark.plans.queries import _screens_union
+
+    viol = spark.range(3)
+    metric = spark.createDataFrame(
+        [(0.5, 99, "shadow")],
+        "metric double, n_violations long, check_name string")
+    names = ["it's", "o'brien's \\ 'check'"]
+    got = _screens_union(spark, [(names[0], viol, None),
+                                 (names[1], viol.limit(1), metric)])
+    assert [tuple(r) for r in got.collect()] == [
+        (names[0], 3, None), (names[1], 1, 0.5)]
 
 
 def test_consistent_years(spark):
